@@ -5,7 +5,8 @@ A from-scratch rebuild of the capability surface of the reference
 see SURVEY.md), re-expressed Spark-first:
 
 - the reference's user-facing Map/Reduce closure API lives in
-  :mod:`simplex_mapreduce_spark.mapreduce` (RDD-backed parity facade,
+  :mod:`simplex_mapreduce_spark.mapreduce` (parity facade run as one
+  Arrow-batched DataFrame pipeline,
   reference: src/mapreduce.go:344-355 ``Run()``);
 - everything relational/extension (scans, joins, aggregations, windows,
   dedup, similarity search, text analysis, event/stream processing) is

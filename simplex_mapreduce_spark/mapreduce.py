@@ -29,26 +29,48 @@ shared FS (Spark's sort-based binary shuffle is the same contract), no
 single-node in-memory Merge (a distributed range-partitioned sort is
 strictly better and required at 100 TB), no infinite task retry.
 
-Scale note: ``groupByKey`` is appropriate here *only because* the API
-contract hands the user's reduce closure the full value list, exactly
-like the reference (mapreduce.go:255).  ``run_combinable`` is the
-map-side-combine fast path for associative reducers — the optimization
-the reference explicitly lacks (it shuffles every raw pair; self-noted
-inefficiency at mapreduce.go:193).
+Execution is one DataFrame pipeline with Python only at the two closure
+boundaries, both Arrow-batched (``mapInArrow``, one call per map
+partition and one ``reduce_fn`` call per key): map over the ``n_map``
+fan-out -> ``groupBy(key).agg(collect_list(value))`` in the JVM ->
+range-partition + ``sortWithinPartitions`` on key (the range sample is
+drawn from the grouped output, so no closure re-runs) -> reduce.
+``collect_list`` is appropriate *only because* the API contract hands
+the reduce closure the full value list, like the reference
+(mapreduce.go:255).  ``run_combinable`` folds an associative combiner
+per key inside the map task (a Hadoop combiner) — the optimization the
+reference lacks (it shuffles every raw pair, mapreduce.go:193).
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 from collections.abc import Callable, Iterable
+from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from simplex_mapreduce_spark.sources.tables import _estimated_scan_splits
 
 MapFn = Callable[[str], Iterable[tuple[str, str]]]
 ReduceFn = Callable[[str, list[str]], str]
+CombineFn = Callable[[str, str], str]
 
 _KV_SCHEMA = "key string, value string"
 
 
+def _kv_batches(pairs: Iterable[tuple[str, str]]):
+    """(key, value) string pairs -> Arrow record batches."""
+    it = iter(pairs)
+    while chunk := list(itertools.islice(it, 10_000)):
+        cols = [pa.array(c, pa.string()) for c in zip(*chunk)]
+        yield pa.RecordBatch.from_arrays(cols, names=["key", "value"])
+
+
+@dataclass
 class MapReduceJob:
     """``MapReduceJob(map_fn, reduce_fn).run(spark, path)``.
 
@@ -58,75 +80,63 @@ class MapReduceJob:
     ``reduce_fn(key, values)`` returns one string value.
     """
 
-    def __init__(
-        self,
-        map_fn: MapFn,
-        reduce_fn: ReduceFn,
-        n_map: int | None = None,
-        n_reduce: int | None = None,
-    ):
-        self.map_fn = map_fn
-        self.reduce_fn = reduce_fn
-        self.n_map = n_map
-        self.n_reduce = n_reduce
+    map_fn: MapFn
+    reduce_fn: ReduceFn
+    n_map: int | None = None
+    n_reduce: int | None = None
 
-    # -- phases ---------------------------------------------------------
+    def _pipeline(
+        self, lines: DataFrame, reduce_fn: ReduceFn, combine: CombineFn | None = None
+    ) -> DataFrame:
+        """Split/Map -> group -> global string sort -> Reduce over a
+        one-column string DataFrame; returns DataFrame[key, value]
+        (globally string-sorted, like the reference's merged output)."""
+        map_fn, spark = self.map_fn, lines.sparkSession
 
-    def _mapped(self, spark: SparkSession, input_path: str):
-        """Split + Map: line-aligned chunks -> user map closure."""
-        min_parts = self.n_map or spark.sparkContext.defaultParallelism
-        lines = spark.sparkContext.textFile(input_path, minPartitions=min_parts)
-        map_fn = self.map_fn
-        # one whole chunk per partition, like DoMap (mapreduce.go:186-192)
-        return lines.mapPartitions(lambda it: map_fn("\n".join(it)))
+        def map_task(batches):
+            # one whole chunk per map partition, like DoMap (mapreduce.go:186)
+            text = "\n".join(s or "" for b in batches for s in b[0].to_pylist())
+            pairs = map_fn(text)
+            if combine is not None:
+                acc: dict[str, str] = {}
+                for k, v in pairs:
+                    acc[k] = combine(acc[k], v) if k in acc else v
+                pairs = acc.items()
+            yield from _kv_batches(pairs)
 
-    def _mapped_from_df(self, df: DataFrame, column: str):
-        map_fn = self.map_fn
-        rdd = df.select(column).rdd.map(lambda r: r[0] or "")
-        # a single-file table scans as one partition; spread the Python
-        # map work across cores (mirrors Split's nMap fan-out,
-        # mapreduce.go:84-97)
-        want = self.n_map or df.sparkSession.sparkContext.defaultParallelism
-        if rdd.getNumPartitions() < want:
-            rdd = rdd.repartition(want)
-        return rdd.mapPartitions(lambda it: map_fn("\n".join(it)))
+        def reduce_task(batches):
+            for b in batches:
+                keys, values = b[0].to_pylist(), b[1].to_pylist()
+                yield from _kv_batches(zip(keys, map(reduce_fn, keys, values)))
 
-    def _reduced(self, kv_rdd):
-        """hash-partition -> group -> per-key reduce -> global string sort."""
-        n_red = self.n_reduce
-        reduce_fn = self.reduce_fn
-        grouped = kv_rdd.groupByKey(numPartitions=n_red)
-        reduced = grouped.map(lambda kv: (kv[0], reduce_fn(kv[0], list(kv[1]))))
+        # a single small file scans as one partition; spread the Python
+        # map work (mirrors Split's nMap fan-out, mapreduce.go:84-97)
+        n_map = self.n_map or spark.sparkContext.defaultParallelism
+        if _estimated_scan_splits(lines) < n_map:
+            lines = lines.repartition(n_map)
+        kv = lines.mapInArrow(map_task, _KV_SCHEMA)
+        grouped = kv.groupBy("key").agg(F.collect_list("value").alias("values"))
         # lexicographic total order == sort.Strings at mapreduce.go:316
-        return reduced.sortByKey()
-
-    # -- entry points ---------------------------------------------------
+        n_red = [self.n_reduce] if self.n_reduce else []
+        ranged = grouped.repartitionByRange(*n_red, "key").sortWithinPartitions("key")
+        return ranged.mapInArrow(reduce_task, _KV_SCHEMA)
 
     def run(self, spark: SparkSession, input_path: str) -> DataFrame:
-        """Full pipeline over a text file; returns DataFrame[key, value]
-        (globally string-sorted, like the reference's merged output)."""
-        out = self._reduced(self._mapped(spark, input_path))
-        return spark.createDataFrame(out, schema=_KV_SCHEMA)
+        """Full pipeline over a text file."""
+        return self._pipeline(spark.read.text(input_path), self.reduce_fn)
 
     def run_on_column(self, df: DataFrame, column: str) -> DataFrame:
         """Same pipeline with a DataFrame string column as the 'file'."""
-        spark = df.sparkSession
-        out = self._reduced(self._mapped_from_df(df, column))
-        return spark.createDataFrame(out, schema=_KV_SCHEMA)
+        return self._pipeline(df.select(column), self.reduce_fn)
 
     def run_combinable(
-        self,
-        spark: SparkSession,
-        input_path: str,
-        combine: Callable[[str, str], str],
+        self, spark: SparkSession, input_path: str, combine: CombineFn
     ) -> DataFrame:
-        """Fast path for associative+commutative reducers: map-side
-        combine via ``reduceByKey`` (partial aggregation — what Spark's
-        hash-agg does for DataFrames automatically)."""
-        out = self._mapped(spark, input_path).reduceByKey(
-            combine, numPartitions=self.n_reduce
-        ).sortByKey()
-        return spark.createDataFrame(out, schema=_KV_SCHEMA)
+        """Same pipeline for associative+commutative reducers: ``combine``
+        folds each key's values inside the map task, and again over the
+        partial results in the reduce."""
+        fold = lambda _key, values: functools.reduce(combine, values)  # noqa: E731
+        return self._pipeline(spark.read.text(input_path), fold, combine)
 
     def save_text(
         self, result: DataFrame, output_path: str, single_file: bool = False
@@ -145,22 +155,11 @@ class MapReduceJob:
         tests/test_mapreduce_parity.py).  The coalesce(1) funnels the
         already-sorted partitions through one writer task — correct for
         parity/debug output, deliberate bottleneck at scale."""
-        from pyspark.sql import functions as F
-
-        src = result
-        if single_file:
-            # sortWithinPartitions(key) after coalesce(1): the
-            # range-sorted input collapses to one partition, and the
-            # in-partition KEY sort re-establishes the reference's
-            # sort.Strings order without a second exchange (sorting the
-            # concatenated line instead would mis-order keys containing
-            # ':' or ' ')
-            src = result.coalesce(1).sortWithinPartitions("key")
-        (
-            src.select(F.concat_ws(": ", "key", "value").alias("value"))
-            .write.mode("overwrite")
-            .text(output_path)
-        )
+        # single_file: one partition, re-sorted on KEY with no second
+        # exchange (sorting the joined line mis-orders keys with ':' or ' ')
+        src = result.coalesce(1).sortWithinPartitions("key") if single_file else result
+        line = F.concat_ws(": ", "key", "value").alias("value")
+        src.select(line).write.mode("overwrite").text(output_path)
 
 
 def word_count_map(chunk: str) -> Iterable[tuple[str, str]]:

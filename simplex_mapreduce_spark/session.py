@@ -48,8 +48,8 @@ _SHIPPED_APPS: set[str] = set()
 def ensure_package_shipped(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via ``addPyFile``.
 
-    Any query that serializes a module-level function to workers (RDD
-    Map/Reduce closures, ``applyInPandas`` / ``mapInPandas`` /
+    Any query that serializes a module-level function to workers
+    (``MapReduceJob`` Map/Reduce closures, ``applyInPandas`` / ``mapInPandas`` /
     ``applyInPandasWithState`` callables) is pickled BY REFERENCE by
     cloudpickle: the worker re-imports ``simplex_mapreduce_spark``.  A
     foreign driver session whose PYTHONPATH / cwd does not include the
@@ -96,6 +96,44 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory() -> str:
+    """About 60% of the box's physical memory (``MemTotal``), in MiB: a
+    fixed 16g asks a 15 GB box for more heap than it has, and under load
+    the JVM is then OOM-killed instead of spilling.  16g where
+    ``/proc/meminfo`` is unreadable."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "16g"
+    return f"{kb * 6 // 10 // 1024}m"
+
+
+def session_conf(
+    cpus: str,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The confs :func:`get_spark` builds its session with; an explicit
+    ``$SPARK_DRIVER_MEMORY`` or ``extra_conf`` entry wins over the
+    defaults."""
+    return {
+        "spark.sql.shuffle.partitions": str(int(shuffle_partitions or cpus)),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY")
+        or default_driver_memory(),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # testdata tables are single small parquet files; the default
+        # 128 MiB split size would scan each on ONE core.  8 MiB keeps
+        # local[32] busy at sf<=1 and is harmless at cluster scale where
+        # files outnumber cores.
+        "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+        **RUNTIME_CONF,
+        **(extra_conf or {}),
+    }
+
+
 def get_spark(
     app_name: str = "simplex-mapreduce-spark",
     cpus: int | str | None = None,
@@ -114,30 +152,14 @@ def get_spark(
     sorts spilling 4 GB at 32 partitions and not at 96
     (scale_bench.py --sf30 passes the scaled count explicitly and
     SCALING.json records both regimes); on a 1000-executor cluster this
-    is 2-3x TOTAL cores, i.e. thousands."""
+    is 2-3x TOTAL cores, i.e. thousands.  The driver heap defaults to
+    :func:`default_driver_memory`."""
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or 32)
-    shuffle = int(shuffle_partitions or cpus)
     # local[N,2]: allow one task retry, mirroring the reference's
     # re-execute-on-failure scheduler (src/master.go:39-72) — local mode
     # defaults to maxFailures=1 (fail-fast), which would turn any
     # transient task error into a job failure.
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus},2]")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # testdata tables are single small parquet files; the default
-        # 128 MiB split size would scan each on ONE core.  8 MiB keeps
-        # local[32] busy at sf<=1 and is harmless at cluster scale where
-        # files outnumber cores.
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-    )
-    for k, v in RUNTIME_CONF.items():
+    builder = SparkSession.builder.appName(app_name).master(f"local[{cpus},2]")
+    for k, v in session_conf(cpus, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    return apply_runtime_conf(spark)
+    return apply_runtime_conf(builder.getOrCreate())

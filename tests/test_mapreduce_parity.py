@@ -113,6 +113,29 @@ def test_merge_single_file_matches_reference_sink(spark, input_file, tmp_path):
     assert all(ln.endswith(": 1") for ln in out_lines)  # unique numbers
 
 
+def test_each_closure_runs_once_per_partition_and_key(spark, input_file):
+    """One ``run(...).collect()`` calls ``map_fn`` once per map
+    partition and ``reduce_fn`` once per output key: the global sort
+    samples the grouped output, so no stage holding a user closure is
+    recomputed (an eager ``sortByKey`` re-ran the reduce 3x per key)."""
+    map_calls = spark.sparkContext.accumulator(0)
+    reduce_calls = spark.sparkContext.accumulator(0)
+
+    def counting_map(chunk: str):
+        map_calls.add(1)
+        return word_count_map(chunk)
+
+    def counting_reduce(key: str, values: list) -> str:
+        reduce_calls.add(1)
+        return word_count_reduce(key, values)
+
+    job = MapReduceJob(counting_map, counting_reduce, N_MAP, N_REDUCE)
+    rows = job.run(spark, input_file).collect()
+    check_golden(rows)
+    assert reduce_calls.value == len(rows)
+    assert map_calls.value == N_MAP
+
+
 def test_every_map_task_processes_work(spark, input_file):
     """checkWorker analog (test_test.go:123-129): the reference asserts
     every worker processed >=1 task (liveness/load-balance).  Spark's

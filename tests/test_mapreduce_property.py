@@ -38,9 +38,10 @@ def test_wordcount_matches_counter(spark, tmp_path_factory, toks):
     lines = [" ".join(toks[i : i + 5]) for i in range(0, len(toks), 5)]
     p.write_text("\n".join(lines) + "\n")
     job = MapReduceJob(word_count_map, word_count_reduce, 3, 2)
-    got = {r["key"]: int(r["value"]) for r in job.run(spark, str(p)).collect()}
+    rows = job.run(spark, str(p)).collect()
+    got = {r["key"]: int(r["value"]) for r in rows}
     expected = dict(Counter(toks))
     assert got == expected
     # output keys are lexicographically sorted (sort.Strings semantics)
-    keys = [r["key"] for r in job.run(spark, str(p)).collect()]
+    keys = [r["key"] for r in rows]
     assert keys == sorted(keys)

@@ -235,6 +235,19 @@ def test_no_plan_antipatterns_in_any_oracled_query(spark):
     assert not bad, f"plan anti-patterns: {bad}"
 
 
+def test_mr_wordcount_is_one_arrow_batched_pipeline(spark):
+    """The MapReduce facade is one DataFrame plan with Python only at
+    its two closure boundaries, both Arrow-batched: exactly two
+    MapInArrow nodes (map, reduce), no RDD round trip (Scan
+    ExistingRDD) and no row-pickled BatchEvalPython."""
+    import re
+
+    plan = _plan(spark, "mr_wordcount")
+    assert len(re.findall(r"^\(\d+\) MapInArrow$", plan, re.M)) == 2, plan
+    assert "Scan ExistingRDD" not in plan
+    assert "BatchEvalPython" not in plan
+
+
 def test_runtime_bloom_filter_fires_at_scale_thresholds(spark):
     """Runtime bloom-filter semi-join reduction (InjectRuntimeFilter) is
     enabled session-wide and must fire on the right shape once scans are

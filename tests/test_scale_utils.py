@@ -4,6 +4,8 @@ operator agrees with the built-in regression aggregate."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -348,3 +350,30 @@ def test_repetition_corpus_preserves_residues_and_mirrors(spark, tmp_path):
         planted = i % 5 == 0
         # planted docs repeat their opening tokens; clean docs don't
         assert (by_id[i].count(f"tok{i}a") >= 4) == planted
+
+
+def test_session_sized_to_the_box(spark, monkeypatch):
+    """The driver heap defaults to ~60% of MemTotal rather than a fixed
+    16g the box may not have; an explicit SPARK_DRIVER_MEMORY or
+    extra_conf still wins; shuffle partitions follow the core count."""
+    from simplex_mapreduce_spark.session import default_driver_memory, session_conf
+
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    assert abs(int(default_driver_memory().removesuffix("m")) - kb * 0.6 / 1024) <= 1
+
+    # the suite's own session was built from the same defaults
+    sc_conf = spark.sparkContext.getConf()
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
+    assert sc_conf.get("spark.driver.memory") == heap
+    cores = spark.sparkContext.defaultParallelism
+    assert sc_conf.get("spark.sql.shuffle.partitions") == str(cores)
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    conf = session_conf("4")
+    assert conf["spark.driver.memory"] == default_driver_memory()
+    assert conf["spark.sql.shuffle.partitions"] == "4"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert session_conf("4")["spark.driver.memory"] == "3g"
+    extra = {"spark.driver.memory": "2g"}
+    assert session_conf("4", extra_conf=extra)["spark.driver.memory"] == "2g"
