@@ -31,7 +31,11 @@ from simplex_mapreduce_spark.functions.textfn import (
     tokens_col,
 )
 from simplex_mapreduce_spark.registry import register
-from simplex_mapreduce_spark.sources.tables import load_table, spread_scan
+from simplex_mapreduce_spark.sources.tables import (
+    load_table,
+    read_parquet,
+    spread_scan,
+)
 
 # near-dup knobs, shared by Spark impls and oracles
 NGRAM_N = 3
@@ -520,7 +524,7 @@ def _stored_groups(spark, table: str, kind: str, group_cap: int):
     stamp = read_table_marker(spark, f"{table}__groups_{kind}", "_GROUP_EPOCH")
     if stamp is None or stamp != read_table_epoch(spark, table):
         return None
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def append_to_shingle_table(spark, docs, table: str) -> None:

@@ -129,6 +129,13 @@ def session_conf(
         # local[32] busy at sf<=1 and is harmless at cluster scale where
         # files outnumber cores.
         "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+        # one pass of the 13 headline queries generates 181 classes;
+        # Spark's default cache of 100 evicts each before its next use,
+        # so Janino recompiled all of them (190 compiles) every pass.
+        # 256 is the smallest power of two at which a second pass
+        # compiles nothing (sf0.01 and sf0.1).  Static: a session built
+        # elsewhere keeps the default.
+        "spark.sql.codegen.cache.maxEntries": "256",
         **RUNTIME_CONF,
         **(extra_conf or {}),
     }

@@ -24,10 +24,14 @@ the derived NTZ column cannot be pushed below the projection.
 
 from __future__ import annotations
 
+import os
+import stat
 from datetime import datetime, timezone
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from simplex_mapreduce_spark.session import apply_runtime_conf
 
@@ -72,16 +76,75 @@ def epoch_nanos(date_str: str) -> int:
     return int(dt.timestamp()) * 1_000_000_000
 
 
+# confs whose values change the schema Spark infers from parquet footers
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# resolved path -> (file fingerprint, SCHEMA_CONFS values, inferred schema);
+# one entry per path, so a rewritten path replaces its stale schema
+_SCHEMAS: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple:
+    """``(size, mtime_ns)`` of a file; for a directory, the sorted
+    ``(relative name, size, mtime_ns)`` of every file below it."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for fn in files:
+            full = os.path.join(root, fn)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without re-inferring the schema.
+
+    Inference reads the footers in a Spark job (~155 ms per table at
+    sf0.01), paid again by every query that loads the table.  The first
+    read of a local path infers as usual and keeps Spark's own
+    ``StructType``; later reads pass it back through
+    ``spark.read.schema``, so they start no job.  The entry holds while
+    the file fingerprint (:func:`_fingerprint`) and the values of
+    :data:`SCHEMA_CONFS` in ``spark`` are unchanged; any change is a
+    miss and infers again.  Non-local schemes always infer."""
+    u = urlparse(path)
+    if u.scheme not in ("", "file"):
+        return spark.read.parquet(path)
+    local = os.path.realpath(u.path if u.scheme else path)
+    try:
+        fp = _fingerprint(local)
+    except OSError:  # missing path: let Spark raise its own error
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in SCHEMA_CONFS)
+    hit = _SCHEMAS.get(local)
+    if hit is not None and hit[:2] == (fp, confs):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[local] = (fp, confs, df.schema)
+    return df
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, *, convert_ts: bool = True
 ) -> DataFrame:
-    """Load one testdata table.
+    """Load one testdata table through :func:`read_parquet`: only the
+    first load of a table in a process infers its schema (one Spark
+    job); later loads start no job until the file changes.
 
     ``convert_ts=False`` keeps timestamp columns as raw epoch-nanos longs
     — the pushdown-friendly representation.
     """
     apply_runtime_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if convert_ts:
         for c in TS_COLS.get(name, ()):
             if dict(df.dtypes).get(c) == "bigint":
@@ -101,9 +164,6 @@ def _estimated_scan_splits(df: DataFrame) -> int:
     to read a partition count.  Falls back to the file COUNT when a
     size is unreadable (non-local scheme) — the quantity only gates a
     toy-scale heuristic, so a conservative estimate is fine."""
-    import os as _os
-    from urllib.parse import urlparse
-
     spark = df.sparkSession
     files = df.inputFiles()
     if not files:
@@ -123,7 +183,7 @@ def _estimated_scan_splits(df: DataFrame) -> int:
         if u.scheme not in ("", "file"):
             return len(files)  # remote store: file count is the floor
         try:
-            sizes.append(_os.path.getsize(u.path or f))
+            sizes.append(os.path.getsize(u.path or f))
         except OSError:
             return len(files)
     total = sum(sizes) + open_cost * len(sizes)

@@ -25,15 +25,16 @@ from simplex_mapreduce_spark.operators.dedup import (
 )
 from simplex_mapreduce_spark.registry import register
 from simplex_mapreduce_spark.session import apply_runtime_conf
+from simplex_mapreduce_spark.sources.tables import read_parquet
 from simplex_mapreduce_spark.streaming.events_stream import _drain
 
 
 def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    path = f"{sf_dir}/documents.parquet"
+    schema = read_parquet(spark, path).schema
     import os
 
-    path = f"{sf_dir}/documents.parquet"
     if os.path.isdir(path):
         # Spark-written table (e.g. the generated sf1 corpus): a
         # DIRECTORY of part files — the streaming file source takes it

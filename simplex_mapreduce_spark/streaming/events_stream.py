@@ -25,15 +25,16 @@ from pyspark.sql import functions as F
 from simplex_mapreduce_spark.operators.events import SESSION_GAP_SECONDS
 from simplex_mapreduce_spark.registry import register
 from simplex_mapreduce_spark.session import apply_runtime_conf
+from simplex_mapreduce_spark.sources.tables import read_parquet
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_conf(spark)
+    path = f"{sf_dir}/events.parquet"
     # schema must be supplied for streaming reads; take it from a batch peek
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_parquet(spark, path).schema
     import os
 
-    path = f"{sf_dir}/events.parquet"
     if os.path.isdir(path):
         # Spark-written table (e.g. the generated sf1 data): a DIRECTORY
         # of part files — the streaming file source takes it directly

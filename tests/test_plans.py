@@ -8,6 +8,8 @@ broadcast, top-k avoids a global sort.
 
 from __future__ import annotations
 
+import os
+
 from simplex_mapreduce_spark import registry
 from simplex_mapreduce_spark.plans.explain import (
     formatted_plan,
@@ -397,3 +399,59 @@ def test_estimated_scan_splits_matches_real_partitioning(spark, tmp_path):
         est = _estimated_scan_splits(df)
         real = df.rdd.getNumPartitions()
         assert est == real, (name, est, real)
+
+
+# the perfbench / bench.py query set runs at sf0.01, next to SF_DIR
+PERFBENCH_SF = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+
+def _job_ids_in_group(spark, group: str, fn) -> list[int]:
+    """Run ``fn`` with the Spark jobs it starts tagged ``group``; the ids
+    of those jobs, read from the status store."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_construction_starts_no_jobs(spark):
+    """Once a query has been built in the session, building it again
+    starts no Spark job: table schemas come from the schema cache
+    (sources.tables.read_parquet), not from a footer-reading job."""
+    from bench import HEADLINE
+    from simplex_mapreduce_spark.operators.dedup import ensure_dedup_ingest
+
+    ensure_dedup_ingest(spark, PERFBENCH_SF)
+    jobs = {}
+    for name in HEADLINE:
+        build = registry.QUERIES[name]
+        build(spark, PERFBENCH_SF)
+        jobs[name] = _job_ids_in_group(
+            spark, f"warm-construct/{name}", lambda: build(spark, PERFBENCH_SF)
+        )
+    assert jobs == {name: [] for name in HEADLINE}
+
+
+def test_warm_relational_pass_compiles_nothing(spark):
+    """The codegen cache holds every class one relational pass
+    generates, so a second pass makes no Janino compile."""
+    from bench import HEADLINE
+
+    relational = HEADLINE[:6]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    counter = compiles.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = counter.getCount()
+        for name in relational:
+            df = registry.QUERIES[name](spark, PERFBENCH_SF)
+            df.write.mode("overwrite").format("noop").save()
+        return counter.getCount() - before
+
+    one_pass()
+    assert one_pass() == 0
