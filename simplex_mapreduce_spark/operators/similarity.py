@@ -28,36 +28,58 @@ _DUCK_COS = (
 )
 
 
-def _dot(x, y):
-    return F.aggregate(
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-    )
+def _dot(x: str, y: str) -> str:
+    """SQL text of the dot product of two array<double> SQL expressions.
+
+    Every cosine and dot product in the engine is built from this one
+    string and handed to ``F.expr``: one py4j call and one parse per
+    expression, where the equivalent ``F.aggregate``/``F.zip_with``
+    Python lambdas cost a py4j round trip per node (~1,100 of the
+    1,555 calls of an ``ann_ivf_topk`` construction).  The plan is the
+    same ``aggregate(zip_with(...))`` either way."""
+    return f"aggregate(zip_with({x}, {y}, (p, q) -> p * q), 0D, (acc, v) -> acc + v)"
 
 
-def _cos(x, y):
-    return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
+def _cos(x: str, y: str) -> str:
+    """SQL text of the cosine of two array<double> SQL expressions
+    (parenthesized, so it composes under a unary minus)."""
+    return f"({_dot(x, y)} / (sqrt({_dot(x, x)}) * sqrt({_dot(y, y)})))"
+
+
+def _doubles(xs) -> str:
+    """SQL text of an array<double> literal holding exactly ``xs``:
+    ``repr`` is the shortest form that parses back to the same double
+    (-0.0 included), so the literal equals ``F.array(*map(F.lit, xs))``
+    bit for bit."""
+    return "array(" + ", ".join(f"{float(x)!r}D" for x in xs) + ")"
+
+
+# ``aggregate`` arguments of the per-row (sim, cell_id) argmax over the
+# broadcast ``cells`` array (struct<cell_id, ce>): strict ``>`` over the
+# cell_id-sorted array keeps the LOWEST cell_id on ties -- the oracle's
+# (sim DESC, cell_id ASC)
+_NEAREST_CELL_ARGS = (
+    "transform(cells, c -> struct("
+    f"{_cos('c.ce', 'e')} AS sim, c.cell_id AS cell_id)), "
+    "named_struct('sim', CAST('-Infinity' AS DOUBLE), 'cell_id', -1L), "
+    "(acc, s) -> CASE WHEN s.sim > acc.sim THEN s ELSE acc END"
+)
 
 
 def _nearest_cell_expr():
-    """Per-row nearest-cell argmax over the broadcast ``cells`` array
-    (struct<cell_id, ce>): strict ``>`` over the cell_id-sorted array
-    keeps the LOWEST cell_id on ties — the oracle's (sim DESC, cell_id
-    ASC).  Shared by the inline ann_ivf_topk plan and the persisted
-    index builder so the two assignments are definitionally identical."""
-    sims = F.transform(
-        "cells",
-        lambda c: F.struct(
-            _cos(c["ce"], F.col("e")).alias("sim"), c["cell_id"].alias("cell_id")
-        ),
-    )
-    return F.aggregate(
-        sims,
-        F.struct(
-            F.lit(float("-inf")).alias("sim"), F.lit(-1).cast("long").alias("cell_id")
-        ),
-        lambda acc, s: F.when(s["sim"] > acc["sim"], s).otherwise(acc),
-        lambda acc: acc["cell_id"],
-    )
+    """Per-row nearest cell_id (see ``_NEAREST_CELL_ARGS``).  Shared by
+    the inline ann_ivf_topk plan and the persisted index builder so the
+    two assignments are definitionally identical."""
+    return F.expr(f"aggregate({_NEAREST_CELL_ARGS}, acc -> acc.cell_id)")
+
+
+# the IVF_NPROBE cell ids nearest the query ``qe`` over ``cells``
+# (sim DESC, cell_id ASC via the ascending sort of (-sim, cell_id))
+_PROBE = (
+    "transform(slice(array_sort(transform(cells, c -> struct("
+    f"-{_cos('c.ce', 'qe')} AS neg_sim, c.cell_id AS cell_id))), "
+    f"1, {IVF_NPROBE}), s -> s.cell_id)"
+)
 
 
 def _embeddings(spark, sf_dir):
@@ -105,7 +127,7 @@ def cosine_topk(spark, sf_dir):
     q = v.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("e").alias("qe")
     )
-    cos = _cos(F.col("e"), F.col("qe"))
+    cos = F.expr(_cos("e", "qe"))
     return (
         v.filter(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(q))
@@ -176,26 +198,12 @@ def ann_ivf_topk(spark, sf_dir):
     # the nprobe cell ids nearest the query
     cells = _centroid_cells(v)
     q = v.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("e").alias("qe"))
-    probe = F.transform(
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    "cells",
-                    lambda c: F.struct(
-                        (-_cos(c["ce"], F.col("qe"))).alias("neg_sim"),
-                        c["cell_id"].alias("cell_id"),
-                    ),
-                )
-            ),
-            1,
-            IVF_NPROBE,
-        ),
-        lambda s: s["cell_id"],
+    index_meta = cells.crossJoin(q).select(
+        "cells", "qe", F.expr(_PROBE).alias("probe")
     )
-    index_meta = cells.crossJoin(q).select("cells", "qe", probe.alias("probe"))
 
     best_cell = _nearest_cell_expr()
-    cos = _cos(F.col("e"), F.col("qe"))
+    cos = F.expr(_cos("e", "qe"))
     return (
         v.filter(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(index_meta))
@@ -366,31 +374,17 @@ def ivf_topk_from_table(spark, table: str):
         ).alias("cells")
     )
     q = idx.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("e").alias("qe"))
-    probe_expr = F.transform(
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    "cells",
-                    lambda c: F.struct(
-                        (-_cos(c["ce"], F.col("qe"))).alias("neg_sim"),
-                        c["cell_id"].alias("cell_id"),
-                    ),
-                )
-            ),
-            1,
-            IVF_NPROBE,
-        ),
-        lambda s: s["cell_id"],
-    )
     # tiny metadata collect: nprobe cell ids become literals so Catalyst
     # can prune the bucketed scan statically (a broadcast-join filter
     # could not prune file listings)
     probed = (
-        cents.crossJoin(q).select(F.explode(probe_expr).alias("cell_id")).collect()
+        cents.crossJoin(q)
+        .select(F.explode(F.expr(_PROBE)).alias("cell_id"))
+        .collect()
     )
     probed_ids = [r.cell_id for r in probed]
 
-    cos = _cos(F.col("e"), F.col("qe"))
+    cos = F.expr(_cos("e", "qe"))
     # cell_id is part of the OUTPUT (which cell each neighbor came from).
     # Pruning mechanics: the literal isin pushes In(cell_id, [...]) into
     # the scan (asserted in tests/test_plans.py), and because the table
@@ -716,17 +710,11 @@ def _rplsh_signature(e_col: str = "e"):
     all per-row JVM expressions, no shuffle.  The single definition both
     embedding_lsh_buckets and embedding_knn_graph build on (a plane-
     count change cannot diverge between them)."""
-
-    def plane_bit(signs: list[float]):
-        plane = F.array(*[F.lit(s) for s in signs])
-        dot = F.aggregate(
-            F.zip_with(F.col(e_col), plane, lambda x, s: x * s),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(dot > 0, "1").otherwise("0")
-
-    return F.concat(*[plane_bit(s) for s in _plane_sign_matrix()])
+    bits = ", ".join(
+        f"CASE WHEN {_dot(e_col, _doubles(signs))} > 0 THEN '1' ELSE '0' END"
+        for signs in _plane_sign_matrix()
+    )
+    return F.expr(f"concat({bits})")
 
 
 def embedding_lsh_buckets(spark, sf_dir):
@@ -821,19 +809,7 @@ def _cells_literal(centroids):
 def _nearest_cell_full():
     """Like :func:`_nearest_cell_expr` but keeps the winning (sim,
     cell_id) struct — k-means needs the similarity for the inertia."""
-    sims = F.transform(
-        "cells",
-        lambda c: F.struct(
-            _cos(c["ce"], F.col("e")).alias("sim"), c["cell_id"].alias("cell_id")
-        ),
-    )
-    return F.aggregate(
-        sims,
-        F.struct(
-            F.lit(float("-inf")).alias("sim"), F.lit(-1).cast("long").alias("cell_id")
-        ),
-        lambda acc, s: F.when(s["sim"] > acc["sim"], s).otherwise(acc),
-    )
+    return F.expr(f"aggregate({_NEAREST_CELL_ARGS})")
 
 
 def kmeans_train(
@@ -1055,7 +1031,7 @@ def embedding_knn_graph(spark, sf_dir):
 
     a = sigs.alias("a")
     b = sigs.alias("b")
-    cos = _cos(F.col("a.e"), F.col("b.e"))
+    cos = F.expr(_cos("a.e", "b.e"))
     pairs = a.join(
         b,
         (F.col("a.bucket") == F.col("b.bucket"))
@@ -1195,7 +1171,7 @@ def embedding_quantization(spark, sf_dir):
     )
     rows = scaled.withColumn("dq", dq).select(
         "label", "max_abs", err.alias("abs_err"),
-        _cos(F.col("e"), F.col("dq")).alias("cos"),
+        F.expr(_cos("e", "dq")).alias("cos"),
     )
     return rows.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
@@ -1302,7 +1278,7 @@ def semantic_dedup(spark, sf_dir):
         "rep_id", F.min("vec_id").over(Window.partitionBy("cell_id", "e"))
     )
     reps = asg.filter(F.col("vec_id") == F.col("rep_id")).withColumn(
-        "nrm", F.sqrt(_dot(F.col("e"), F.col("e")))
+        "nrm", F.expr(f"sqrt({_dot('e', 'e')})")
     )
     # SALTED in-cell join (round-8, from the planted hot-cell skew
     # drill): the pair join's key is cell_id, and a corpus whose
@@ -1355,9 +1331,7 @@ def semantic_dedup(spark, sf_dir):
         (F.col("a.prio") == F.col("b.prio"))
         & (F.col("a.vec_id") < F.col("b.vec_id"))
     )
-    pair_cos = _dot(F.col("a.e"), F.col("b.e")) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
+    pair_cos = F.expr(f"{_dot('a.e', 'b.e')} / (a.nrm * b.nrm)")
     mx = (
         a.join(
             b,
@@ -1379,7 +1353,7 @@ def semantic_dedup(spark, sf_dir):
         .alias("status"),
         F.round(F.coalesce("mx", F.lit(-1.0)), 4).alias("max_prior_sim"),
     )
-    self_cos = _cos(F.col("e"), F.col("e"))
+    self_cos = F.expr(_cos("e", "e"))
     member_out = asg.filter(F.col("vec_id") != F.col("rep_id")).select(
         "vec_id",
         "cell_id",
@@ -1407,6 +1381,11 @@ PCA_ITERS = 6
 # the iteration chain — the Gumbel-key round-before-order recipe
 # applied to iterative state.
 PCA_STATE_ROUND = 9
+
+
+def _centered(e: str, mu) -> str:
+    """SQL text of the array expression ``e`` minus the mean ``mu``."""
+    return f"zip_with({e}, {_doubles(mu)}, (a, b) -> a - b)"
 
 
 def pca_power_train(v, iters: int = PCA_ITERS):
@@ -1437,13 +1416,13 @@ def pca_power_train(v, iters: int = PCA_ITERS):
             mu[r["pos"]] = round(r["m"], PCA_STATE_ROUND)
         w = [round(1.0 / math.sqrt(dim), PCA_STATE_ROUND)] * dim
         for _ in range(iters):
-            mu_lit = F.array(*[F.lit(x) for x in mu])
-            w_lit = F.array(*[F.lit(x) for x in w])
-            cent = F.zip_with(F.col("e"), mu_lit, lambda a, b: a - b)
-            s = _dot(cent, w_lit)
+            cent = _centered("e", mu)
+            s = F.expr(_dot(cent, _doubles(w)))
             u = [0.0] * dim
             for r in (
-                v.select(s.alias("s"), F.posexplode(cent).alias("pos", "cx"))
+                v.select(
+                    s.alias("s"), F.posexplode(F.expr(cent)).alias("pos", "cx")
+                )
                 .groupBy("pos")
                 .agg((F.sum(F.col("cx") * F.col("s")) / F.lit(n)).alias("u"))
                 .collect()
@@ -1527,9 +1506,7 @@ def pca_top_component(spark, sf_dir):
     north star]"""
     v = _embeddings(spark, sf_dir)
     mu, w, n = pca_power_train(v)
-    mu_lit = F.array(*[F.lit(x) for x in mu])
-    w_lit = F.array(*[F.lit(x) for x in w])
-    s = _dot(F.zip_with(F.col("e"), mu_lit, lambda a, b: a - b), w_lit)
+    s = F.expr(_dot(_centered("e", mu), _doubles(w)))
     scored = v.select("vec_id", s.alias("p"))
     lam = scored.agg(
         F.round(F.sum(F.col("p") * F.col("p")) / F.lit(float(n)), 4).alias(
@@ -1692,16 +1669,12 @@ def pca_top2_components(spark, sf_dir):
     deflation completion of pca_top_component]"""
     v = _embeddings(spark, sf_dir)
     mu, w1, n = pca_power_train(v)
-    mu_lit = F.array(*[F.lit(x) for x in mu])
-    w1_lit = F.array(*[F.lit(x) for x in w1])
-    cent = F.zip_with(F.col("e"), mu_lit, lambda a, b: a - b)
-    s1 = _dot(cent, w1_lit)
-    e2 = F.zip_with(cent, w1_lit, lambda c, w: c - s1 * w)
-    v2 = v.select("vec_id", e2.alias("e"))
+    cent = _centered("e", mu)
+    s1 = _dot(cent, _doubles(w1))
+    e2 = f"zip_with({cent}, {_doubles(w1)}, (c, w) -> c - {s1} * w)"
+    v2 = v.select("vec_id", F.expr(e2).alias("e"))
     mu2, w2, _ = pca_power_train(v2)
-    mu2_lit = F.array(*[F.lit(x) for x in mu2])
-    w2_lit = F.array(*[F.lit(x) for x in w2])
-    s2 = _dot(F.zip_with(e2, mu2_lit, lambda a, b: a - b), w2_lit)
+    s2 = _dot(_centered(e2, mu2), _doubles(w2))
 
     def part(score_col, comp):
         scored = v.select("vec_id", score_col.alias("p"))
@@ -1717,4 +1690,8 @@ def pca_top2_components(spark, sf_dir):
             "eigenvalue",
         )
 
-    return part(s1, 1).unionByName(part(s2, 2)).orderBy("vec_id", "component")
+    return (
+        part(F.expr(s1), 1)
+        .unionByName(part(F.expr(s2), 2))
+        .orderBy("vec_id", "component")
+    )

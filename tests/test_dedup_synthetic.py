@@ -1482,3 +1482,103 @@ def test_posting_list_candidates_equal_selfjoin(spark):
         )
         assert len(new) > 0
     sets.unpersist()
+
+
+def test_stored_pair_plans_follow_every_mutation(spark, tmp_path):
+    """The stored near-dup pair plan is analyzed once per table epoch
+    (dedup._stored_pairs).  A warm call reuses it through a fresh
+    QueryExecution; each mutation of the table or its sidecar (drop,
+    same-epoch refresh, bucket compaction, append, full rebuild)
+    yields a freshly built plan whose output matches an uncached build
+    over the mutated table; and a plan of another application (a
+    stopped session) is dropped, never served."""
+    import random
+    from unittest import mock
+
+    from simplex_mapreduce_spark.operators import dedup as D
+
+    rng = random.Random(13)
+    vocab = [f"w{i}" for i in range(40)]
+    docs = [
+        (i, " ".join(rng.choices(vocab, k=rng.randint(6, 20))))
+        for i in range(30)
+    ]
+    docs += [(200, docs[2][1]), (201, docs[2][1])]  # a mirror group
+    ddir = str(tmp_path / "corpus")
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
+        f"{ddir}/documents.parquet"
+    )
+    t = D._shingle_table_name(ddir)
+    builds = mock.Mock(wraps=D.ngram_jaccard_pairs)
+
+    def stored():
+        """(pairs, whether the plan was built rather than reused)"""
+        n = builds.call_count
+        rows = D.stored_jaccard_pairs(spark, ddir).collect()
+        return {(r.doc_a, r.doc_b): r.jaccard for r in rows}, builds.call_count > n
+
+    def uncached():
+        rows = D.jaccard_pairs_from_table(spark, t).collect()
+        return {(r.doc_a, r.doc_b): r.jaccard for r in rows}
+
+    def after(mutation):
+        mutation()
+        got, built = stored()
+        assert built
+        assert got == uncached()
+        return got
+
+    try:
+        with mock.patch.object(D, "ngram_jaccard_pairs", builds):
+            first, built = stored()
+            assert built and (200, 201) in first
+            assert stored() == (first, False)
+            a = D.stored_jaccard_pairs(spark, ddir)._jdf.queryExecution()
+            b = D.stored_jaccard_pairs(spark, ddir)._jdf.queryExecution()
+            assert a != b  # Java identity: QueryExecution has no equals
+
+            app = spark.sparkContext.applicationId
+            D._PAIR_PLANS[("local-stopped", t, "dg")] = D._PAIR_PLANS.pop(
+                (app, t, "dg")
+            )
+            assert stored() == (first, True)
+            assert ("local-stopped", t, "dg") not in D._PAIR_PLANS
+
+            assert after(lambda: D._drop_group_sidecars(spark, t)) == first
+            assert after(lambda: D.refresh_group_sidecars(spark, t)) == first
+            # same epoch, same stamp, rewritten sidecar files
+            assert after(lambda: D.refresh_group_sidecars(spark, t)) == first
+            gone = spark.createDataFrame([(201,)], "doc_id long")
+            compacted = after(
+                lambda: D.compact_shingle_table_removals(spark, gone, t)
+            )
+            assert (200, 201) not in compacted and compacted != first
+            # an append poisons the ingest fingerprint: the next call
+            # rebuilds the table from the corpus directory
+            extra = spark.createDataFrame(
+                [(300, docs[2][1])], "doc_id long, text string"
+            )
+            assert after(lambda: D.append_to_shingle_table(spark, extra, t)) == first
+            assert after(lambda: D.build_shingle_table(spark, ddir, t)) == first
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_unlicensed_sets_never_get_a_pair_plan(spark):
+    """A patched ``stored_shingle_sets`` returns a frame without the
+    table license: both pair queries then recompute their groups
+    inline and leave no entry in the plan cache."""
+    from unittest import mock
+
+    from simplex_mapreduce_spark.operators import dedup as D
+
+    docs = _docs(spark)
+    before = set(D._PAIR_PLANS)
+    with mock.patch.object(
+        D, "stored_shingle_sets", lambda spark, sf_dir: D.shingle_sets(docs=docs)
+    ):
+        jac = D.stored_jaccard_pairs(spark, "unused")
+        lsh = D.stored_minhash_pairs(spark, "unused")
+    assert set(D._PAIR_PLANS) == before
+    assert (1, 4) in {(r.doc_a, r.doc_b) for r in jac.collect()}
+    assert (1, 4) in {(r.doc_a, r.doc_b) for r in lsh.collect()}
